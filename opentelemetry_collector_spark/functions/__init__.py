@@ -5,23 +5,20 @@ Everything here is either a built-in ``pyspark.sql.functions`` composition
 Python is banned by the input contract (BASELINE.json input_hint).
 """
 
-from .hashing import fnv1a32, fnv1a32_udf, portable_bucket, salted_key, token_digest
+from .hashing import fnv1a32, fnv1a32_udf, portable_bucket, salted_key
 from .grok import GrokPattern, grok_extract, grok_first_match, grok_to_regex
-from .scalars import enum_code, epoch_micros, hex_id, micros_to_ts, service_name
+from .scalars import enum_code, epoch_micros, hex_id
 
 __all__ = [
     "fnv1a32",
     "fnv1a32_udf",
     "portable_bucket",
     "salted_key",
-    "token_digest",
     "GrokPattern",
     "grok_extract",
     "grok_first_match",
     "grok_to_regex",
     "hex_id",
     "epoch_micros",
-    "micros_to_ts",
-    "service_name",
     "enum_code",
 ]

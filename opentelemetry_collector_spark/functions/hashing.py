@@ -69,16 +69,6 @@ def portable_bucket(col: Column, n_buckets: int, prime: int = 100003, mult: int 
     return F.pmod(F.pmod(key, F.lit(prime)) * F.lit(mult), F.lit(n_buckets))
 
 
-def token_digest(tokens: Column) -> Column:
-    """Order-sensitive 64-bit digest of an ``array<int32>`` token column.
-
-    Used for the per-row token-array-equality invariant at bench scale
-    (FIXTURES.md §1): xxhash64 over the array value hashes structure, not a
-    string rendering, so no int32→string lossiness.
-    """
-    return F.xxhash64(tokens)
-
-
 def salted_key(source: Column, doc_id: Column, n_salt: int) -> list[Column]:
     """Composite repartition key ``(source, pmod(xxhash64(doc_id), n_salt))``.
 

@@ -32,15 +32,6 @@ def epoch_micros(ts: Column) -> Column:
     return F.unix_micros(ts.cast("timestamp_ltz"))
 
 
-def micros_to_ts(us: Column) -> Column:
-    return F.timestamp_micros(us)
-
-
-def service_name(attrs_service: Column, default: str = "unknown_service") -> Column:
-    """The translators' service-name fallback: coalesce to a default."""
-    return F.coalesce(attrs_service, F.lit(default))
-
-
 def enum_code(col: Column, mapping: dict[str, int], default: int = 0) -> Column:
     """String enum → int code via a literal CASE chain (dictionary lookup)."""
     expr: Column = F.lit(default)

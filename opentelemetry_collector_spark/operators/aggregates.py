@@ -71,16 +71,6 @@ def batch_size_stats(
     return df.groupBy(batch).agg(*aggs)
 
 
-def metric_families(df: DataFrame, name_col: str, ts_col: str, value_col: str) -> DataFrame:
-    """Prometheus-receiver metricsbuilder analog: assemble per-metric series
-    (start time = min ts, points collected in ts order)."""
-    return df.groupBy(name_col).agg(
-        F.min(ts_col).alias("start_ts"),
-        F.count(F.lit(1)).alias("n_points"),
-        F.sort_array(F.collect_list(F.struct(ts_col, value_col))).alias("points"),
-    )
-
-
 def approx_distinct_audit(
     df: DataFrame,
     key: str,

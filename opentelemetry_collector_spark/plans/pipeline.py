@@ -10,11 +10,13 @@ Scale posture (the 100 TB story):
 
 - parse/enrich are narrow (no shuffle): regexp_extract in codegen + a
   broadcast hash join.  The input scan is the only full pass.
-- route is a single CASE-WHEN tag (one pass) + per-sink filtered writes over
-  one persisted frame.
+- route is a single CASE-WHEN tag (one pass) + ONE ``partitionBy(sink)``
+  write: every row is written exactly once, with no cached copy.
 - the pre-write ``repartition(salted_key)`` splits the zipf-head source
   across SALT buckets so no reducer/writer owns 34 % of the data.
 - aggregates are partial+final hash aggs (bytes moved ≈ #groups, not #rows).
+  After a write, the sent counters are read from the written data, so no
+  count re-runs the parse/enrich/route DAG.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..functions.grok import GrokPattern
 from ..functions.hashing import salted_key
@@ -76,9 +79,6 @@ class PipelineSpec:
     # synthetic resource — records get a deterministic resource_id as a
     # pure projection (no shuffle); applied after filters
     group_by_attrs: list[str] = field(default_factory=list)
-    # ONE partitionBy(sink) write instead of cache + N filtered writes —
-    # the only mode that holds at 10^12 rows (no full-dataset cache copy).
-    single_pass_fanout: bool = True
 
 
 def engine_columns(df: DataFrame, spec: "PipelineSpec") -> frozenset[str]:
@@ -108,8 +108,11 @@ def run_pipeline(
     """Execute the flagship job; returns the stage frames + aggregates.
 
     Returns keys: parsed, enriched, tagged, source_counts, sink_counts.
-    When ``io`` is given, each sink subset is committed as a snapshot group
-    and the metrics table is appended (resumable via plans.ledger).
+    When ``io`` is given, the routed frame is written in one partitioned
+    fan-out (one snapshot commit per sink, resumable), ``sink_counts`` is a
+    small local frame counted from the written data, and the metrics table
+    is appended.  Without ``io``, ``sink_counts`` is the lazy aggregate over
+    the routed frame.
     """
     spec = spec or PipelineSpec()
     metrics = metrics or StageMetrics(run_id=run_id)
@@ -175,42 +178,30 @@ def run_pipeline(
         else:
             salted = tagged
         sinks = [r.sink for r in sorted(spec.routes, key=lambda x: x.priority)]
-        if spec.single_pass_fanout and hasattr(io, "append_group_partitioned"):
-            # 100 TB path: ONE partitionBy(sink) pass, no cache — every row
-            # written exactly once; per-sink manifests keep resume semantics.
-            commit = metrics.timeit(
-                "write:fanout",
-                lambda: io.append_group_partitioned(salted, "sink", sinks, run_id),
+        commit = metrics.timeit(
+            "write:fanout",
+            lambda: io.append_group_partitioned(salted, "sink", sinks, run_id),
+        )
+        for s, snap in commit.snapshots.items():
+            metrics.rows.append((run_id, f"commit:{s}", -1, None, None, None, snap))
+        # Sent counters from the WRITTEN data: one columnar readback gives
+        # both the lineage rows and the returned sink_counts, so no caller
+        # re-runs parse/enrich/route.  The read takes the routed frame's
+        # types for sink and size: an empty write has no file to infer a
+        # schema from, and inference would turn a numeric sink name into a
+        # number.  A resume no-op whose data was cleaned away (data_dir
+        # None) keeps the lazy counts over the routed frame.
+        if commit.data_dir is not None:
+            read_schema = StructType([f for f in tagged.schema if f.name in ("sink", spec.size_col)])
+            counts = counts_by_sink(
+                spark.read.schema(read_schema).parquet(commit.data_dir), "sink", spec.size_col
             )
-            for s, snap in commit.snapshots.items():
-                metrics.rows.append((run_id, f"commit:{s}", -1, None, None, None, snap))
-            # lineage from the WRITTEN data (columnar count readback) — no
-            # second execution of the parse/enrich DAG.  The commit handle
-            # carries the data path (no IO-layout assumptions); a resume
-            # no-op whose data was cleaned away returns None → skip.
-            if commit.data_dir is not None:
-                written = spark.read.parquet(commit.data_dir)
-                for row in (
-                    written.groupBy("sink").agg(F.count(F.lit(1)).alias("n")).collect()
-                ):
-                    metrics.rows.append(
-                        (run_id, f"lineage:{row['sink']}", -1, None, int(row["n"]), None, None)
-                    )
-        else:
-            # fallback (non-partitioned IO): bounded-memory DISK_ONLY cache +
-            # per-sink filtered writes — never MEMORY-pressure the executors
-            # with a full copy of the routed frame.
-            from pyspark.storagelevel import StorageLevel
-
-            cached = salted.persist(StorageLevel.DISK_ONLY)
-            for s in sinks:
-                branch = cached.filter(F.col("sink") == s)
-                snap = metrics.timeit(
-                    f"write:{s}", lambda b=branch, t=s: io.append_group(b, t, f"{run_id}-{t}")
+            rows = counts.collect()
+            for row in rows:
+                metrics.rows.append(
+                    (run_id, f"lineage:{row['sink']}", -1, None, int(row["n_rows"]), None, None)
                 )
-                metrics.rows.append((run_id, f"commit:{s}", -1, None, None, None, snap))
-            metrics.record_stage("routed:salted", cached)
-            cached.unpersist()
+            out["sink_counts"] = spark.createDataFrame(rows, counts.schema)
         # north_rule: per-partition lineage + throughput land in a metrics
         # TABLE, not just the driver.
         io.append_group(metrics.to_df(spark), "_metrics", f"{run_id}-metrics")

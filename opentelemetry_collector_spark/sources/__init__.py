@@ -7,19 +7,17 @@ internal pdata schema (receiver/otlpreceiver, receiver/jaegerreceiver
 - ``testdata``  — parquet scans of the driver tables (the native scan, S1).
 - ``synthetic`` — deterministic seeded generators (host-metrics-receiver
   analog, S6; also FIXTURES.md §1-4 fixture tables).
-- ``tableio``   — the Iceberg/parquet-snapshot TableIO seam used by every
-  sink, with append snapshots + resume ledger support (K7).
+- ``tableio``   — the parquet-snapshot TableIO seam used by every sink,
+  with append snapshots + resume ledger support (K7).
 """
 
-from .testdata import TESTDATA_TABLES, load_table, register_views
-from .synthetic import gen_sequences, gen_raw_lines, gen_lookup, gen_routes
+from .testdata import TESTDATA_TABLES, load_table
+from .synthetic import gen_sequences, gen_raw_lines, gen_lookup
 
 __all__ = [
     "TESTDATA_TABLES",
     "load_table",
-    "register_views",
     "gen_sequences",
     "gen_raw_lines",
     "gen_lookup",
-    "gen_routes",
 ]

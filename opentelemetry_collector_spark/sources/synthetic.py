@@ -141,14 +141,3 @@ def gen_lookup(spark: SparkSession) -> DataFrame:
         for k in range(9)
     ]
     return spark.createDataFrame(rows, "source string, env string, team string, region string")
-
-
-def gen_routes(spark: SparkSession) -> DataFrame:
-    """Router config table (FIXTURES.md §4): first-match-wins by priority."""
-    rows = [
-        ("sink_hot", "source = 'src0'", 0),
-        ("sink_warm", "source IN ('src1','src2','src3')", 1),
-        ("sink_errors", "level = 'ERROR'", 2),
-        ("sink_default", "TRUE", 9),
-    ]
-    return spark.createDataFrame(rows, "sink string, predicate string, priority int")

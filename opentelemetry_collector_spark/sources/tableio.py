@@ -1,4 +1,4 @@
-"""TableIO seam: Iceberg sinks with a parquet-snapshot fallback (SURVEY.md §7.0).
+"""TableIO seam: parquet-snapshot sinks with atomic per-group commits.
 
 Collector analog: exporterhelper's queued-retry sender gives at-least-once
 delivery with bounded retry (exporter/exporterhelper/queued_retry.go ~approx);
@@ -8,17 +8,14 @@ partition groups, each group's write is committed atomically (manifest file
 written last), and a re-run skips already-committed groups.  This is what the
 north_rule calls "resumable from Iceberg snapshot checkpoints".
 
-Two implementations behind one interface:
-
-- ``IcebergIO``      — used when an Iceberg catalog is configured on the
-  session (``spark.sql.catalog.<name>`` + iceberg-spark-runtime jar); uses
-  ``df.writeTo(table).append()`` whose snapshot commit is already atomic.
-- ``ParquetSnapshotIO`` — offline fallback (no Iceberg jar in this sandbox):
-  directory-per-table with ``data/group=<gid>/`` parquet plus a
-  ``_snapshots/<gid>.json`` manifest written **after** the data; a group is
-  visible iff its manifest exists, so a crash mid-write leaves an invisible
-  partial group that the re-run overwrites.  Same interface — moving to real
-  Iceberg is configuration-only.
+``ParquetSnapshotIO`` implements the seam offline (no Iceberg jar in this
+sandbox): directory-per-table with ``data/group=<gid>/`` parquet plus a
+``_snapshots/<gid>.json`` manifest written **after** the data; a group is
+visible iff its manifest exists, so a crash mid-write leaves an invisible
+partial group that the re-run overwrites.  The flagship fan-out goes through
+``append_group_partitioned``: one ``partitionBy`` write of the routed frame,
+then one manifest per sink table.  The Iceberg design this seam stands in
+for stays documented-only, in SURVEY.md §7.0.
 """
 
 from __future__ import annotations
@@ -50,6 +47,11 @@ class TableIO:
     """Interface: append-by-group with idempotent commit + committed-group ledger."""
 
     def append_group(self, df: DataFrame, table: str, group_id: str) -> str:
+        raise NotImplementedError
+
+    def append_group_partitioned(
+        self, df: DataFrame, part_col: str, tables: list[str], group_id: str
+    ) -> FanoutCommit:
         raise NotImplementedError
 
     def committed_groups(self, table: str) -> set[str]:
@@ -240,49 +242,3 @@ class ParquetSnapshotIO(TableIO):
         for fdf in frames[1:]:
             out = out.unionByName(fdf, allowMissingColumns=True)
         return out
-
-
-@dataclass
-class IcebergIO(TableIO):
-    """Real Iceberg path (requires iceberg-spark-runtime on the session).
-
-    Not exercisable in this sandbox (no jar, offline) but kept thin and
-    obvious: Iceberg's snapshot commit is atomic, so append_group maps to a
-    plain ``writeTo().append()`` tagged with the group id as a snapshot
-    property, and the ledger is the snapshot log.
-    """
-
-    catalog: str
-
-    def _fq(self, table: str) -> str:
-        return f"{self.catalog}.{table}"
-
-    def append_group(self, df: DataFrame, table: str, group_id: str) -> str:
-        if group_id in self.committed_groups(table):
-            return f"iceberg-dup-{group_id}"
-        df.writeTo(self._fq(table)).option("snapshot-property.group_id", group_id).append()
-        last = (
-            df.sparkSession.sql(f"SELECT snapshot_id FROM {self._fq(table)}.snapshots ORDER BY committed_at DESC LIMIT 1")
-            .collect()[0][0]
-        )
-        return str(last)
-
-    def committed_groups(self, table: str) -> set[str]:
-        spark = SparkSession.getActiveSession()
-        try:
-            rows = spark.sql(
-                f"SELECT summary['group_id'] AS g FROM {self._fq(table)}.snapshots"
-            ).collect()
-        except Exception:
-            return set()
-        return {r.g for r in rows if r.g is not None}
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.table(self._fq(table))
-
-
-def make_io(root_or_catalog: str, kind: str = "parquet") -> TableIO:
-    """Factory: ``kind='iceberg'`` when the runtime jar + catalog exist."""
-    if kind == "iceberg":
-        return IcebergIO(catalog=root_or_catalog)
-    return ParquetSnapshotIO(root=root_or_catalog)

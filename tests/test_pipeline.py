@@ -94,13 +94,18 @@ def test_snapshot_io_idempotent_and_resume(spark, tel, tmp_path):
 def test_full_pipeline_with_sinks_and_metrics(spark, tel, tmp_path):
     io = ParquetSnapshotIO(root=str(tmp_path))
     m = StageMetrics(run_id="t1")
-    run_pipeline(spark, tel, gen_lookup(spark), io=io, run_id="t1", metrics=m)
-    total = sum(io.read(spark, s).count() for s in io_sinks(io))
-    assert total == N
+    out = run_pipeline(spark, tel, gen_lookup(spark), io=io, run_id="t1", metrics=m)
+    written = {s: io.read(spark, s).count() for s in io_sinks(io)}
+    assert sum(written.values()) == N
     mdf = m.to_df(spark)
     # single-pass fanout: one write stage, one commit row per sink
     assert mdf.filter("stage LIKE 'write:%'").count() == 1
     assert mdf.filter("stage LIKE 'commit:%'").count() == 4
+    # sent counters are the written data's counts, and match the lineage rows
+    sent = {r.sink: r.n_rows for r in out["sink_counts"].collect()}
+    lineage = {st[len("lineage:"):]: rows_out for _, st, _, _, rows_out, _, _ in m.rows
+               if st.startswith("lineage:")}
+    assert sent == written == lineage
 
 
 def io_sinks(io):
@@ -213,12 +218,32 @@ def test_fanout_commit_handle_carries_data_dir(spark, tmp_path):
     tagged = out["tagged"]
     commit = io.append_group_partitioned(tagged, "sink", list(sinks), "r1")  # no-op
     assert commit.data_dir is not None and commit.data_dir.endswith("group=r1")
+    # a resume no-op over data still on disk counts the written rows
+    again = run_pipeline(spark, tel, gen_lookup(spark), io=io, run_id="r1")
+    assert sorted(again["sink_counts"].collect()) == sorted(out["sink_counts"].collect())
+    assert again["sink_counts"].agg(F.sum("n_rows")).collect()[0][0] == 100
     # clean the fanout data, keep manifests → resume no-op reports None
     shutil.rmtree(commit.data_dir)
     commit2 = io.append_group_partitioned(tagged, "sink", list(sinks), "r1")
     assert commit2.data_dir is None and commit2.snapshots.keys() == commit.snapshots.keys()
     # and the full pipeline resume path survives the cleaned dir (no crash)
-    run_pipeline(spark, tel, gen_lookup(spark), io=io, run_id="r1")
+    # and still reports the sent counts, from the routed frame this time
+    out = run_pipeline(spark, tel, gen_lookup(spark), io=io, run_id="r1")
+    assert out["sink_counts"].agg(F.sum("n_rows")).collect()[0][0] == 100
+
+
+@pytest.mark.parametrize("case", ["empty_input", "all_dropped"])
+def test_written_run_with_nothing_to_write(spark, tel, tmp_path, case):
+    """Empty or fully-dropped input: the run returns with empty sent
+    counts, and its metrics group is still committed."""
+    records, spec = tel.limit(0), PipelineSpec()
+    if case == "all_dropped":
+        records, spec = tel, PipelineSpec(drop_conditions=["n_tok >= 0"])
+    io = ParquetSnapshotIO(str(tmp_path / "sinks"))
+    out = run_pipeline(spark, records, gen_lookup(spark), spec=spec, io=io, run_id="r1")
+    assert out["sink_counts"].collect() == []
+    assert out["sink_counts"].columns == ["sink", "n_rows", "n_tok_sum"]
+    assert "r1-metrics" in io.committed_groups("_metrics")
 
 
 def test_snapshot_time_travel_read(spark, tmp_path):

@@ -65,6 +65,20 @@ def test_pipeline_aggregates_are_partial_final(spark):
     assert "partial_count" in plan
 
 
+def test_written_sink_counts_do_not_rerun_the_pipeline(spark, tmp_path):
+    """After a fan-out write, the sent counters come from the written data:
+    collecting them runs no grok parse and no enrich join."""
+    from opentelemetry_collector_spark.sources.tableio import ParquetSnapshotIO
+
+    out = run_pipeline(spark, gen_telemetry(spark, 1000, partitions=4), gen_lookup(spark),
+                       io=ParquetSnapshotIO(str(tmp_path)))
+    counts = out["sink_counts"]
+    assert sum(r.n_rows for r in counts.collect()) == 1000
+    plan = explain(counts)
+    assert "BroadcastHashJoin" not in plan
+    assert "regexp_extract" not in plan
+
+
 def test_tail_sample_is_semi_join(spark):
     plan = explain(QUERIES["tail_sample_semi_join"](spark, SF), "simple")
     assert "LeftSemi" in plan
